@@ -111,6 +111,50 @@ def test_d3_verification_is_candidate_restricted(spark):
     assert not re.search(r"shingle#\d+\)?\s*=\s*shingle#\d+", plan)
 
 
+def test_jaccard_length_prefilter_is_lossless(spark):
+    """verify_candidate_jaccard_sets prunes on |small|/|large| before the
+    array_intersect. Its output must equal brute-force Jaccard over every
+    candidate pair, including the degenerate cases where the size ratio
+    is NULL (two empty sets) or tiny (an empty or 1-element set against a
+    large one), and pairs whose Jaccard lands exactly on the threshold."""
+    sets = {
+        1: [],
+        2: [],
+        3: ["a"],
+        4: list("abcdefghij"),  # vs 3: J = 1/10, size-skewed
+        5: ["a", "b"],
+        6: ["a", "b", "c", "d"],  # vs 5: J = 0.5 exactly
+        7: ["a", "b", "c", "d", "e"],  # vs 6: J = 0.8 exactly
+        8: ["w", "x", "y", "z"],  # disjoint from the rest
+        9: ["e", "d", "c", "b", "a"],  # = 7 in another order: J = 1
+    }
+    sets_df = spark.createDataFrame(
+        list(sets.items()), "doc_id long, sh array<string>"
+    )
+    pairs = list(itertools.combinations(sorted(sets), 2))
+    cands = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+
+    for threshold in (0.0, 0.5, 0.8):
+        want = {}
+        for a, b in pairs:
+            sa, sb = set(sets[a]), set(sets[b])
+            if sa | sb:  # Jaccard of two empty sets is undefined (NULL)
+                j = len(sa & sb) / len(sa | sb)
+                if j >= threshold:
+                    want[(a, b)] = j
+        got = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in dedup.verify_candidate_jaccard_sets(
+                cands, sets_df, threshold
+            ).collect()
+        }
+        assert set(got) == set(want), threshold
+        for k in want:
+            assert got[k] == pytest.approx(want[k], abs=1e-12)
+        # J = 0.8 meets every threshold, the last one exactly
+        assert (6, 7) in got, threshold
+
+
 def test_jaccard_max_df_noop_when_under_cap(spark):
     """With the df cap above every shingle's document frequency, capped
     results are exactly the uncapped ones (the d2 registry query relies

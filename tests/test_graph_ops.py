@@ -80,15 +80,18 @@ def test_pagerank_partitioning_invariant(spark):
 
 def test_pagerank_checkpoint_cadence_invariant(spark):
     """The lineage-truncation cadence is a physical knob only: ranks at
-    cadence 1 (checkpoint every round), cadence 2 (the default), and
-    cadence ≥ max_iter (never mid-loop) must agree bit-for-bit, and odd
-    iteration counts must not skip the final materialization."""
+    cadence 1 (the default, checkpoint every round), cadence 2, and
+    cadence ≥ max_iter (never mid-loop) must agree bit-for-bit, for odd
+    and even iteration counts alike (neither may skip the final
+    materialization)."""
     edges = [(i, (i * 7) % 23) for i in range(23)] + [(i, 0) for i in range(23)]
     edf = spark.createDataFrame(edges, ["src", "dst"]).filter("src != dst")
     nodes = spark.createDataFrame([(i,) for i in range(23)], ["id"])
     from etl_power_bi_dashboard_spark.operators.graph import pagerank
 
-    for iters in (7,):  # odd count exercises the i == max_iter-1 tail
+    # 7: at cadence 2 the last round is checkpointed only by the
+    # i == max_iter-1 tail; 8: it falls on the cadence itself
+    for iters in (7, 8):
         a = _rank_map(
             pagerank(nodes, edf, node_col="id", max_iter=iters, checkpoint_every=1)
         )

@@ -22,15 +22,13 @@ from etl_power_bi_dashboard_spark.operators.transform import (
 from etl_power_bi_dashboard_spark.pipeline import run_pipeline
 from etl_power_bi_dashboard_spark.sources.olist import extract_data
 
-RAW = "/root/reference/data/raw/"
-
 
 @pytest.fixture(scope="module")
-def raw_no_translation(tmp_path_factory):
+def raw_no_translation(olist_raw_dir, tmp_path_factory):
     d = tmp_path_factory.mktemp("raw_no_trans")
-    for f in os.listdir(RAW):
+    for f in os.listdir(olist_raw_dir):
         if f != "product_category_name_translation.csv":
-            shutil.copy(os.path.join(RAW, f), d / f)
+            shutil.copytree(os.path.join(olist_raw_dir, f), d / f)
     return str(d)
 
 
@@ -107,8 +105,8 @@ def test_median_fill_interpolates(spark):
     assert sorted(filled) == [1.0, 2.0, 3.0, 4.0, 8.0]
 
 
-def test_quality_gates(spark):
-    dims, fact, aggs = run_pipeline(spark, RAW)
+def test_quality_gates(spark, olist_raw_dir):
+    dims, fact, aggs = run_pipeline(spark, olist_raw_dir)
     violations = quality.fk_violations(fact, dims)
     assert set(violations.values()) == {0}
     nulls = quality.null_audit(fact)
@@ -118,8 +116,8 @@ def test_quality_gates(spark):
     assert shapes["fact_sales"][0] == 300
 
 
-def test_sink_roundtrip(spark, tmp_path):
-    dims, fact, aggs = run_pipeline(spark, RAW)
+def test_sink_roundtrip(spark, tmp_path, olist_raw_dir):
+    dims, fact, aggs = run_pipeline(spark, olist_raw_dir)
     written = sinks.export_star(dims, fact, aggs, str(tmp_path))
     assert "fact_sales" in written and "dim_date" in written
     back = spark.read.parquet(str(tmp_path / "fact_sales_parquet"))

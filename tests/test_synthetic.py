@@ -4,23 +4,12 @@ reference's pools/weights, and generation is deterministic."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from etl_power_bi_dashboard_spark.operators import quality
 from etl_power_bi_dashboard_spark.pipeline import run_pipeline
 from etl_power_bi_dashboard_spark.sources.olist import SCHEMAS, extract_data
-from etl_power_bi_dashboard_spark.sources.synthetic import (
-    create_sample_data,
-    synthetic_olist,
-)
-
-
-@pytest.fixture(scope="module")
-def raw_dir(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("synthetic_raw")
-    create_sample_data(spark, str(d))
-    return str(d)
+from etl_power_bi_dashboard_spark.sources.synthetic import synthetic_olist
 
 
 def test_schemas_match_sources(spark):
@@ -29,8 +18,8 @@ def test_schemas_match_sources(spark):
         assert df.columns == [f.name for f in SCHEMAS[name].fields], name
 
 
-def test_extract_reads_generated_fixture(spark, raw_dir):
-    raw = extract_data(spark, raw_dir)
+def test_extract_reads_generated_fixture(spark, olist_raw_dir):
+    raw = extract_data(spark, olist_raw_dir)
     assert raw is not None
     assert raw["customers"].count() == 100
     assert raw["orders"].count() == 200
@@ -38,8 +27,8 @@ def test_extract_reads_generated_fixture(spark, raw_dir):
     assert "category_translation" in raw
 
 
-def test_pipeline_runs_on_synthetic_fixture(spark, raw_dir):
-    dims, fact, aggs = run_pipeline(spark, raw_dir)
+def test_pipeline_runs_on_synthetic_fixture(spark, olist_raw_dir):
+    dims, fact, aggs = run_pipeline(spark, olist_raw_dir)
     assert fact.count() > 0
     # every fact FK resolves (the generator only emits in-range ids)
     violations = quality.fk_violations(fact, dims)
