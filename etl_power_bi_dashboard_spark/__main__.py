@@ -56,6 +56,15 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             print(f"{name:32s} {q.doc}")
         return 0
 
+    if args.cmd == "pipeline":
+        from .sources.olist import missing_inputs
+
+        missing = missing_inputs(args.raw_dir)
+        for path in missing:
+            print(f"missing required input: {path}", file=sys.stderr)
+        if missing:
+            return 1
+
     if spark is None:
         from .session import get_spark
 
@@ -64,11 +73,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     if args.cmd == "pipeline":
         from .pipeline import run_pipeline
 
-        result = run_pipeline(spark, args.raw_dir, args.out_dir)
-        if result is None:
-            print("extract failed: missing required input files")
-            return 1
-        dims, fact, aggs = result
+        dims, fact, aggs = run_pipeline(spark, args.raw_dir, args.out_dir)
         print(f"dims={list(dims)} fact_rows={fact.count()} aggs={list(aggs)}")
         return 0
 

@@ -5,6 +5,8 @@ promoted from inline prints to reusable assertions.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -18,20 +20,54 @@ FK_COLUMNS = {
 
 
 def fk_violations(fact: DataFrame, dims: dict[str, DataFrame]) -> dict[str, int]:
-    """Q1: per-dimension count of fact FKs with no matching dim id
-    (left-anti join on distinct keys — zero on a consistent star)."""
-    out: dict[str, int] = {}
-    for dim_name, fk in FK_COLUMNS.items():
-        if dim_name not in dims or fk not in fact.columns:
-            continue
-        dim_ids = dims[dim_name].select(F.col("id"))
-        orphans = (
-            fact.select(F.col(fk).alias("fk"))
-            .distinct()
-            .join(dim_ids, F.col("fk") == F.col("id"), "left_anti")
-        )
-        out[dim_name] = orphans.count()
-    return out
+    """Q1: per-dimension count of distinct fact FKs with no matching dim
+    id (zero on a consistent star); a NULL FK counts as an orphan, and a
+    dimension absent from ``dims`` or whose FK column is absent from
+    ``fact`` is skipped.
+
+    One query for every dimension: the (dimension, key) pairs are
+    exploded out of a single fact scan, deduplicated, left-anti joined
+    against the tagged union of the dimensions' ids, and counted per
+    dimension. Keys are compared as strings so dimensions with different
+    key types share one join column."""
+    pairs = [
+        (dim_name, fk)
+        for dim_name, fk in FK_COLUMNS.items()
+        if dim_name in dims and fk in fact.columns
+    ]
+    if not pairs:
+        return {}
+    fact_keys = fact.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(dim_name).alias("dim"),
+                        F.col(fk).cast("string").alias("key"),
+                    )
+                    for dim_name, fk in pairs
+                ]
+            )
+        ).alias("p")
+    ).select("p.dim", "p.key")
+    dim_keys = functools.reduce(
+        DataFrame.unionAll,
+        [
+            dims[dim_name].select(
+                F.lit(dim_name).alias("dim"), F.col("id").cast("string").alias("key")
+            )
+            for dim_name, _ in pairs
+        ],
+    )
+    orphans = (
+        fact_keys.distinct()
+        .join(dim_keys, ["dim", "key"], "left_anti")
+        .groupBy("dim")
+        .count()
+        .collect()
+    )
+    counts = {r["dim"]: r["count"] for r in orphans}
+    return {dim_name: counts.get(dim_name, 0) for dim_name, _ in pairs}
 
 
 def null_audit(df: DataFrame, cols: list[str] | None = None) -> dict[str, int]:

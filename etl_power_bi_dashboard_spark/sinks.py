@@ -7,12 +7,20 @@ Parquet is the scale path (columnar, predicate-pushdown-friendly; at
 reference's BI-import convenience; ``single_file=True`` coalesces to one
 part-file per table like pandas' single-file output (only sensible for
 dimension-sized tables).
+
+``export_star`` runs each table's upstream plan once: it writes the
+Parquet straight from the plan, then the CSV from a schema-pinned read
+of that Parquet, so both formats hold the same rows by construction
+without caching the table. The tables are independent, so their exports
+run concurrently; a failed export fails the call.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 
 
@@ -28,6 +36,32 @@ def _write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = No
     w.parquet(path)
 
 
+def _export_table(
+    df: DataFrame,
+    output_path: str,
+    name: str,
+    single_file_csv: bool,
+    partition_by: list[str] | None,
+) -> None:
+    """Parquet from the table's plan, then CSV from that Parquet.
+
+    No cache is needed for the plan to run once, and none is wanted: a
+    cached AQE plan keeps every shuffle partition, so each aggregate
+    would be cached and written as ``spark.sql.shuffle.partitions``
+    tasks and files. Written directly, AQE coalesces the final stage.
+    The read-back pins the table's schema (a partition column keeps its
+    type instead of being inferred from directory names) and its column
+    order (a partitioned read puts the partition column last)."""
+    parquet_path = os.path.join(output_path, f"{name}_parquet")
+    _write_parquet(df, parquet_path, partition_by)
+    written = (
+        df.sparkSession.read.schema(df.schema)
+        .parquet(parquet_path)
+        .select(*df.columns)
+    )
+    _write_csv(written, os.path.join(output_path, f"{name}_csv"), single_file_csv)
+
+
 def export_star(
     dims: dict[str, DataFrame],
     fact: DataFrame,
@@ -36,10 +70,16 @@ def export_star(
     single_file_csv: bool = True,
     partition_fact: bool = False,
 ) -> list[str]:
-    """S4+S5: write every table as both CSV and Parquet under
+    """S4+S5: write every table as both Parquet and CSV under
     ``output_path`` (dim_*/fact_sales/agg_* naming, ef:421-432).
-    Returns the list of table names written."""
-    written: list[str] = []
+
+    Each table's plan runs once: Parquet is written from the plan and
+    the CSV from the written Parquet. The tables are exported
+    concurrently, on up to ``defaultParallelism`` threads; every write
+    job keeps the caller's job group and description. If any export
+    fails, the first failure (in table order) is raised once the
+    running exports have finished. Returns the table names written,
+    dimensions first, then fact_sales, then the aggregates."""
     tables: dict[str, DataFrame] = {}
     for name, df in dims.items():
         tables[f"dim_{name}"] = df
@@ -47,26 +87,32 @@ def export_star(
         tables["fact_sales"] = fact
     for name, df in aggs.items():
         tables[f"agg_{name}"] = df
-    for name, df in tables.items():
-        # each table is written twice (CSV + parquet); persist around
-        # the pair so the upstream lineage — for fact_sales, the whole
-        # join/aggregate pipeline — executes once, not per-format
-        df = df.persist()
-        try:
-            _write_csv(
-                df, os.path.join(output_path, f"{name}_csv"), single_file_csv
-            )
-            _write_parquet(
+    if not tables:
+        return []
+    spark = next(iter(tables.values())).sparkSession
+    workers = min(len(tables), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        # one wrapper per table: each captures its own copy of the
+        # caller's local properties, which Spark mutates per execution
+        futures = [
+            pool.submit(
+                inheritable_thread_target(spark)(_export_table),
                 df,
-                os.path.join(output_path, f"{name}_parquet"),
-                ["date_id"]
-                if (partition_fact and name == "fact_sales")
-                else None,
+                output_path,
+                name,
+                single_file_csv,
+                ["date_id"] if (partition_fact and name == "fact_sales") else None,
             )
-        finally:
-            df.unpersist()
-        written.append(name)
-    return written
+            for name, df in tables.items()
+        ]
+        try:
+            for f in futures:
+                f.result()
+        except BaseException:
+            for f in futures:
+                f.cancel()
+            raise
+    return list(tables)
 
 
 BI_CONTRACT = """# BI integration contract

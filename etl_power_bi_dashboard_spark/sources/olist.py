@@ -166,16 +166,22 @@ def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return clean, bad
 
 
+def missing_inputs(base_path: str) -> list[str]:
+    """Paths of the required raw files absent from ``base_path``."""
+    paths = [os.path.join(base_path, FILENAMES[name]) for name in REQUIRED]
+    return [p for p in paths if not os.path.exists(p)]
+
+
 def extract_data(spark: SparkSession, base_path: str) -> dict[str, DataFrame] | None:
     """S1-S3: load the raw tables; `category_translation` is optional
     (existence probe, ef:39-40); any missing *required* file → None
     (error-tolerant extract, ef:45-47)."""
-    out: dict[str, DataFrame] = {}
-    for name in REQUIRED:
-        path = os.path.join(base_path, FILENAMES[name])
-        if not os.path.exists(path):
-            return None
-        out[name] = read_csv(spark, path, name)
+    if missing_inputs(base_path):
+        return None
+    out: dict[str, DataFrame] = {
+        name: read_csv(spark, os.path.join(base_path, FILENAMES[name]), name)
+        for name in REQUIRED
+    }
     trans_path = os.path.join(base_path, FILENAMES["category_translation"])
     if os.path.exists(trans_path):
         out["category_translation"] = read_csv(spark, trans_path, "category_translation")

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
+import shutil
 
 from etl_power_bi_dashboard_spark.__main__ import main
 
@@ -77,3 +79,20 @@ def test_run_format_out_contract(spark, tmp_path):
         spark=spark,
     ) == 0
     assert spark.read.parquet(out).count() > 0
+
+
+def test_cli_pipeline_names_missing_input(spark, olist_raw_dir, tmp_path):
+    """A raw dir without a required file exits 1 and names the file on
+    stderr; extract_data itself still returns None."""
+    from etl_power_bi_dashboard_spark.sources.olist import extract_data
+
+    raw = tmp_path / "raw"
+    shutil.copytree(olist_raw_dir, raw)
+    shutil.rmtree(raw / "olist_order_items_dataset.csv")
+    err = io.StringIO()
+    with contextlib.redirect_stderr(err):
+        rc, out = _run(["pipeline", str(raw)], spark=spark)
+    assert rc == 1
+    missing = os.path.join(str(raw), "olist_order_items_dataset.csv")
+    assert err.getvalue() == f"missing required input: {missing}\n"
+    assert extract_data(spark, str(raw)) is None

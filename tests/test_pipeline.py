@@ -116,6 +116,51 @@ def test_quality_gates(spark, olist_raw_dir):
     assert shapes["fact_sales"][0] == 300
 
 
+def _fk_violations_per_dimension(fact, dims):
+    """Reference: one distinct + left-anti count per dimension."""
+    out = {}
+    for dim_name, fk in quality.FK_COLUMNS.items():
+        if dim_name not in dims or fk not in fact.columns:
+            continue
+        dim_ids = dims[dim_name].select(F.col("id"))
+        orphans = (
+            fact.select(F.col(fk).alias("fk"))
+            .distinct()
+            .join(dim_ids, F.col("fk") == F.col("id"), "left_anti")
+        )
+        out[dim_name] = orphans.count()
+    return out
+
+
+def test_fk_violations_matches_per_dimension_counts(spark):
+    """The one-pass FK audit equals the per-dimension left-anti counts:
+    orphans in two dimensions, NULL FKs counted as orphans, a dimension
+    absent from ``dims`` and an FK column absent from ``fact`` skipped."""
+    fact = spark.createDataFrame(
+        [
+            ("o1", "c1", "p1", 20220101),
+            ("o2", "c2", "p2", 20220102),
+            ("o3", "c9", "p8", 20220101),
+            ("o4", "c9", "p9", 20220102),
+            ("o5", None, None, 20220101),
+            ("o6", "c1", "p8", None),
+        ],
+        "order_id string, customer_id string, product_id string, date_id long",
+    )
+    dims = {
+        "customer": spark.createDataFrame([("c1",), ("c2",)], "id string"),
+        "product": spark.createDataFrame([("p1",), ("p2",), ("p3",)], "id string"),
+        "date": spark.createDataFrame([(20220101,), (20220102,)], "id long"),
+        # fact has no seller_id column: skipped
+        "seller": spark.createDataFrame([("s1",)], "id string"),
+        # no "order" dimension: skipped
+    }
+    got = quality.fk_violations(fact, dims)
+    assert got == _fk_violations_per_dimension(fact, dims)
+    assert got == {"customer": 2, "product": 3, "date": 1}
+    assert list(got) == ["customer", "product", "date"]
+
+
 def test_sink_roundtrip(spark, tmp_path, olist_raw_dir):
     dims, fact, aggs = run_pipeline(spark, olist_raw_dir)
     written = sinks.export_star(dims, fact, aggs, str(tmp_path))
